@@ -202,7 +202,7 @@ object SparkEntry {
       // materialized once (the cap guard, both self-join sides and the
       // seed projection otherwise each recompute the distinct scan) —
       // persist, not localCheckpoint: the lineage stays analyzable, so
-      // PlanAudit still sees the parquet scan under this query
+      // `graft.Probe plan` still sees the parquet scan under this query
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
         .persist()
@@ -444,8 +444,9 @@ object SparkEntry {
       }.orderBy(col("grp"))
     }),
 
-    // the rule's COMPOSITE-KEY scope (r18, measured on SaltBench's
-    // comp-* arms before shipping): the user joins on (k, k2); only k
+    // the rule's COMPOSITE-KEY scope (r18, measured on the comp-*
+    // arms before shipping, docs/BENCH_NOTES.md "r18: SaltJoinRule
+    // scope extension"): the user joins on (k, k2); only k
     // is manifest-declared, and count(k=a ∧ k2=b) ≤ count(k=a) makes
     // the k-derived fan-out a valid bound for the composite hot mass
     // (a declared-not-hot column would veto instead — OpsSpec pins
@@ -476,10 +477,10 @@ object SparkEntry {
       }.orderBy(col("grp"))
     }),
 
-    // the rule's FACT-PRESERVING LEFT-JOIN scope (r18, measured on
-    // SaltBench's left-* arms): dim covers k < 50 only, so keys 50..96
-    // are preserved with null grp — every preserved fact row keeps
-    // exactly ONE salt, so the null-extended rows appear exactly once
+    // the rule's FACT-PRESERVING LEFT-JOIN scope (r18, measured on the
+    // left-* arms, docs/BENCH_NOTES.md "r18: SaltJoinRule scope
+    // extension"): dim covers k < 50 only, so keys 50..96 are preserved
+    // with null grp — every preserved fact row keeps exactly ONE salt, so the null-extended rows appear exactly once
     // and the plain LEFT JOIN oracle certifies it
     "rel_join_autosalt_left" -> ((s, d) => withTempDir("graft-saltrulel") { base =>
       val dir = s"$base/fact"
@@ -1638,30 +1639,25 @@ object SparkEntry {
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.segment.GraftCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      val olds = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.autoBroadcastJoinThreshold").map(k => k -> s.conf.getOption(k))
-      try {
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-        Tables.orders(s, d).createOrReplaceTempView("graft_spj_orders_src")
-        Tables.customer(s, d).createOrReplaceTempView("graft_spj_customer_src")
-        s.sql(s"CREATE TABLE $cat.db.o (o_custkey BIGINT, cents BIGINT) " +
-          "PARTITIONED BY (bucket(8, o_custkey))")
-        s.sql(s"INSERT INTO $cat.db.o SELECT o_custkey, " +
-          "CAST(round(o_totalprice * 100, 0) AS BIGINT) FROM graft_spj_orders_src")
-        s.sql(s"CREATE TABLE $cat.db.c (c_custkey BIGINT, c_mktsegment STRING) " +
-          "PARTITIONED BY (bucket(8, c_custkey))")
-        s.sql(s"INSERT INTO $cat.db.c SELECT c_custkey, c_mktsegment " +
-          "FROM graft_spj_customer_src")
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      Tables.orders(s, d).createOrReplaceTempView("graft_spj_orders_src")
+      Tables.customer(s, d).createOrReplaceTempView("graft_spj_customer_src")
+      s.sql(s"CREATE TABLE $cat.db.o (o_custkey BIGINT, cents BIGINT) " +
+        "PARTITIONED BY (bucket(8, o_custkey))")
+      s.sql(s"INSERT INTO $cat.db.o SELECT o_custkey, " +
+        "CAST(round(o_totalprice * 100, 0) AS BIGINT) FROM graft_spj_orders_src")
+      s.sql(s"CREATE TABLE $cat.db.c (c_custkey BIGINT, c_mktsegment STRING) " +
+        "PARTITIONED BY (bucket(8, c_custkey))")
+      s.sql(s"INSERT INTO $cat.db.c SELECT c_custkey, c_mktsegment " +
+        "FROM graft_spj_customer_src")
+      GraftSession.withConf(s,
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         s.sql(
           s"""SELECT c.c_mktsegment, count(*) AS n_orders, sum(o.cents) AS sum_cents
             |FROM $cat.db.o o JOIN $cat.db.c c ON o.o_custkey = c.c_custkey
             |GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment""".stripMargin)
           .localCheckpoint(true)
-      } finally olds.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     }),
     // additive schema evolution on the table format: a first commit
@@ -4946,10 +4942,8 @@ object SparkEntry {
   private def withSaltRule(s: SparkSession, requireFire: Boolean = true)(
       build: => DataFrame): DataFrame = {
     val prev = s.experimental.extraOptimizations
-    val prevThresh = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
     s.experimental.extraOptimizations = prev :+ graft.plans.SaltJoinRule(s)
-    try {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try GraftSession.withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = build
       // requireFire=false when the rule's own size guard CORRECTLY
       // vetoes at the caller's scale (dim bytes × salts > fact bytes
@@ -4960,10 +4954,7 @@ object SparkEntry {
           "SaltJoinRule must fire: this row certifies the REWRITTEN " +
             "plan's results, not the plain one's")
       joined.localCheckpoint()
-    } finally {
-      s.experimental.extraOptimizations = prev
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-    }
+    } finally s.experimental.extraOptimizations = prev
   }
 
   /** Per-value totals off a graft-segment table's merged STRING map —
@@ -5144,29 +5135,21 @@ object SparkEntry {
       .select(col("product_id").cast("string").as("product_id"), col("stock").cast("long").as("stock"))
       .join(reqDf.select(col("product_id")).distinct(), Seq("product_id"), "left_semi")
       .as[InventoryProcessor.ProductStock].groupByKey(_.product_id)
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // one RocksDB instance per state partition: 8 stores cover this
-      // key cardinality; 32 mostly-idle stores pay open/commit/maintain
-      // per micro-batch for nothing (at cluster scale you SIZE this to
-      // the key space — the knob, not the default, is the design)
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = InventoryProcessor.reserve(requests, seed)
+    // one RocksDB instance per state partition: 8 stores cover this
+    // key cardinality; 32 mostly-idle stores pay open/commit/maintain
+    // per micro-batch for nothing (at cluster scale you SIZE this to
+    // the key space — the knob, not the default, is the design)
+    GraftSession.withConf(s,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.shuffle.partitions" -> "8") {
+      InventoryProcessor.reserve(requests, seed)
         .writeStream.outputMode("append")
         .option("checkpointLocation", s"$base/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .format("parquet").option("path", s"$base/verdicts")
         .start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProvider match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        .awaitTermination()
     }
     val verdicts = s.read.parquet(s"$base/verdicts").as[InventoryProcessor.LineVerdict]
     InventoryProcessor.orderVerdicts(verdicts)
@@ -5211,19 +5194,11 @@ object SparkEntry {
         col("p_size").cast("long").as("stock"))
       .join(reqDf.select(col("product_id")).distinct(), Seq("product_id"), "left_semi")
       .as[InventoryProcessor.ProductStock]
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.shuffle.partitions", "8") // sized to key space, as streamSagaCounts
+    GraftSession.withConf(s,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.shuffle.partitions" -> "8") { // sized to key space, as streamSagaCounts
       SagaLoop.run(s, s"$base/in", s"$base/verdicts", s"$base/ckpt", seed)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProvider match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
     val verdicts = s.read.option("recursiveFileLookup", "true")
       .parquet(s"$base/verdicts")
@@ -5267,9 +5242,7 @@ object SparkEntry {
         lit(-1L).as("user_id"),
         lit(0.0).as("value"))
         .write.mode("overwrite").parquet(s"$base/in/sentinel")))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "8")
+    GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
       val q = s.readStream.schema(ev.schema).parquet(s"$base/in/*")
         .withWatermark("ts", "1 hour")
         .groupBy(session_window(col("ts"), "10 minutes"), col("user_id"))
@@ -5284,7 +5257,7 @@ object SparkEntry {
         .format("parquet").option("path", s"$base/out")
         .start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     s.read.parquet(s"$base/out")
       .filter(col("user_id") =!= -1L)
       .orderBy(col("user_id"), col("session_start"))
@@ -5311,9 +5284,7 @@ object SparkEntry {
       () => ev.filter(col("event_type") === "purchase").coalesce(4)
         .write.mode("overwrite").parquet(s"$base/in_purch")))
     val schema = ev.schema
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "8")
+    GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
       val clicks = s.readStream.schema(schema).parquet(s"$base/in_clicks")
         .withWatermark("ts", "1 hour")
         .select(col("event_id").as("click_id"), col("ts").as("c_ts"),
@@ -5333,7 +5304,7 @@ object SparkEntry {
         .format("parquet").option("path", s"$base/out")
         .start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     s.read.parquet(s"$base/out")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -5373,9 +5344,7 @@ object SparkEntry {
         .write.mode("overwrite").parquet(s"$base/in_purch/data"),
       () => sentinel(-2L).write.mode("overwrite").parquet(s"$base/in_purch/sentinel")))
     val schema = ev.schema
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "8")
+    GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
       val clicks = s.readStream.schema(schema).parquet(s"$base/in_clicks/*")
         .withWatermark("ts", "1 hour")
         .select(col("event_id").as("click_id"), col("ts").as("c_ts"),
@@ -5396,7 +5365,7 @@ object SparkEntry {
         .format("parquet").option("path", s"$base/out")
         .start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     s.read.parquet(s"$base/out")
       .filter(col("user_id") =!= -1L)
       .groupBy(col("user_id"))
@@ -5440,9 +5409,7 @@ object SparkEntry {
         .write.mode("overwrite").parquet(s"$base/in_purch/data"),
       () => sentinel(-2L).write.mode("overwrite").parquet(s"$base/in_purch/sentinel")))
     val schema = ev.schema
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "8")
+    GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
       val clicks = s.readStream.schema(schema).parquet(s"$base/in_clicks/*")
         .withWatermark("ts", "1 hour")
         .select(col("event_id").as("click_id"), col("ts").as("c_ts"),
@@ -5466,7 +5433,7 @@ object SparkEntry {
         .format("parquet").option("path", s"$base/out")
         .start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     s.read.parquet(s"$base/out")
       .filter(col("user_id") =!= -1L)
       .orderBy(col("click_id"))
@@ -5502,9 +5469,7 @@ object SparkEntry {
         lit("sentinel").as("event_type"),
         lit(0.0).as("value"))
         .write.mode("overwrite").parquet(s"$base/in/sentinel")))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "8")
+    GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
       val q = s.readStream.schema(ev.schema).parquet(s"$base/in/*")
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
@@ -5518,7 +5483,7 @@ object SparkEntry {
         .format("parquet").option("path", s"$base/out")
         .start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     s.read.parquet(s"$base/out")
       .filter(col("event_type") =!= "sentinel")
       .orderBy(col("win_start"), col("event_type"))
@@ -5544,9 +5509,7 @@ object SparkEntry {
       () => third.coalesce(4).write.parquet(s"$base/in/a"),
       () => third.coalesce(4).write.parquet(s"$base/in/b"), // byte-identical duplicates
       () => ev.filter(col("event_id") % 5 === 0).coalesce(4).write.parquet(s"$base/in/c")))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "8")
+    GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
       val q = s.readStream.schema(ev.schema).parquet(s"$base/in/*")
         .withWatermark("ts", "30 days")
         .dropDuplicatesWithinWatermark("event_id")
@@ -5556,7 +5519,7 @@ object SparkEntry {
         .format("parquet").option("path", s"$base/out")
         .start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     s.read.parquet(s"$base/out")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"))

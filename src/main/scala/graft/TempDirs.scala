@@ -1,7 +1,7 @@
 package graft
 
-/** Recursive temp-tree delete, shared by the bench harnesses and the
-  * query registry's cached-artifact cleanup — ONE implementation so a
+/** Recursive temp-tree delete, shared by the query registry's temp
+  * dirs and cached-artifact cleanup — ONE implementation so a
   * future fix (symlink handling, NFS retry) lands everywhere at once
   * (this was three divergent copies before r17's review pass). Depth-
   * first via name-count sort; the walk stream is closed explicitly

@@ -54,7 +54,8 @@ object Skew {
     *    every null-extended row, which is why `right`/`full` are
     *    rejected: flip the arguments and use `left` instead.
     *
-    * SaltBench r18 measured both shapes at ×80 (75%-hot fact, 32-way):
+    * Measured r18 for both shapes at ×80 (75%-hot fact, 32-way; see
+    * docs/BENCH_NOTES.md "r18: SaltJoinRule scope extension"):
     * same ~2× win over plain SMJ as the single-key inner case — the
     * shuffle mechanics don't care how many key columns or whether
     * unmatched rows are preserved. */

@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * `array_sort` over the per-word edges). One shuffle per Viterbi
   * pass instead of `maxWordLen` sequential vocabulary-scale joins —
   * the earlier join-per-position formulation was pure scheduling
-  * cost (16 jobs per train; BenchOne attributed 15 s of cold train
-  * to it at sf0.1). No theta join anywhere.
+  * cost (16 jobs per train; `graft.Probe one` attributed 15 s of
+  * cold train to it at sf0.1). No theta join anywhere.
   *
   * Determinism across engines (the Lloyd/Pca discipline): piece
   * costs -ln(freq/total) are FLOAT-quantized before any comparison,

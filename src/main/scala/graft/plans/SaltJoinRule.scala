@@ -42,8 +42,9 @@ import graft.sources.segment.GraftSegmentTable
   *
   *  - join type is Inner, or a fact-preserving outer join — LeftOuter
   *    with the fact scan on the LEFT, RightOuter with it on the RIGHT
-  *    (r18, measured first: SaltBench's left arms win like the inner
-  *    ones, because the preserved fact row keeps exactly one salt —
+  *    (r18, measured first — docs/BENCH_NOTES.md "r18: SaltJoinRule
+  *    scope extension": the left arms win like the inner ones,
+  *    because the preserved fact row keeps exactly one salt —
   *    unmatched rows survive exactly once — while dim replication is
   *    invisible on the non-preserved side; replicating a PRESERVED dim
   *    would emit `salts` null-extended copies, so those orientations
@@ -62,15 +63,17 @@ import graft.sources.segment.GraftSegmentTable
   *    map may not describe the snapshot);
   *  - the dim side is NOT broadcast-eligible (sizeInBytes above
   *    `autoBroadcastJoinThreshold`): a broadcast join has no fact-side
-  *    shuffle, hence NO skew problem — SaltBench measured BHJ 0.8 s vs
-  *    best salted 2.5 s at x80, so rewriting a broadcastable join
+  *    shuffle, hence NO skew problem — measured BHJ 0.8 s vs best
+  *    salted 2.5 s at x80 (docs/BENCH_NOTES.md "r17: AQE
+  *    skew-join"), so rewriting a broadcastable join
   *    would be strictly worse;
   *  - replicating the dim `salts` times costs less than the fact scan
   *    it parallelizes (dim bytes x salts <= fact bytes, plan stats).
   *
   * Why a static rewrite when AQE splits skewed sort-merge joins at
-  * runtime? Measured head-to-head (SaltBench, 75%-hot fact, 32-way
-  * local): AQE's split works at MAP-OUTPUT granularity, so it cannot
+  * runtime? Measured head-to-head (docs/BENCH_NOTES.md "r17: AQE
+  * skew-join vs manifest salting", 75%-hot fact, 32-way local):
+  * AQE's split works at MAP-OUTPUT granularity, so it cannot
   * split at all when the hot partition's bytes come from few mappers
   * (a 1-file table: "0 skewed partitions" with a 97 MB hot partition —
   * salted x2.5 faster at x40); with 32 mappers and a tuned advisory
@@ -164,7 +167,7 @@ case class SaltJoinRule(session: SparkSession) extends Rule[LogicalPlan]
       scala.util.Try((dim.stats.sizeInBytes, fact.stats.sizeInBytes))
         .toOption.flatMap { case (dimSize, factSize) =>
           // broadcast beats any salting (no fact shuffle at all,
-          // SaltBench measured dominant)
+          // measured dominant: docs/BENCH_NOTES.md "r17: AQE skew-join")
           val thresh = conf.autoBroadcastJoinThreshold
           if (thresh >= 0 && dimSize <= BigInt(thresh)) None
           else {

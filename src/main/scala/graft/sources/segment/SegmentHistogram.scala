@@ -183,7 +183,8 @@ object SegmentHistogram {
     // clustered write streams equal keys back to back — folding a run
     // into one pending (key, count) turns the per-row TreeMap walk +
     // boxing into a primitive compare (measured ~50% → ~threshold
-    // write tax on a 90%-hot column, graft.WriteBench)
+    // write tax on a 90%-hot column; docs/BENCH_NOTES.md "r15
+    // continuation: frequency-histogram statistics")
     private var lastKey = 0L
     private var lastRun = 0L // 0 = no pending run
     private def flush(): Unit = {
@@ -232,7 +233,8 @@ object SegmentHistogram {
     // one murmur over ≤64 bytes + ~one equality, where an ordered
     // walk pays ~log(distinct) byte-wise compares PER ROW on exactly
     // the no-run workloads the run-length memo cannot absorb
-    // (graft.WriteBench r16: −2/3 of the string collector's tax).
+    // (r16: −2/3 of the string collector's tax, docs/BENCH_NOTES.md
+    // "r16: string-map write tax").
     // Byte order is restored by ONE sort of ≤[[MaxDistinct]] entries
     // at flush time. Boxed values — see [[Collector.freq]].
     private val freq = new java.util.HashMap[UTF8String, java.lang.Long]()

@@ -111,14 +111,12 @@ object TimeoutExpiry {
       completeType: String,
       timeoutMs: Long): Unit = {
     import spark.implicits._
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // size the store count to the key space (150 users here), not
-      // the session default — idle stores bill open/commit per batch
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
+    // size the store count to the key space (150 users here), not
+    // the session default — idle stores bill open/commit per batch
+    graft.GraftSession.withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.shuffle.partitions" -> "8") {
       // NO pre-stateful event_type filter: Catalyst pushes such a
       // predicate BELOW the EventTimeWatermark node (it doesn't touch
       // the ts column), which would drop the watermark-advancing
@@ -140,12 +138,6 @@ object TimeoutExpiry {
         .format("parquet").option("path", outDir)
         .start()
       q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

@@ -443,7 +443,8 @@ class OpsSpec extends SparkSpec {
       // row level too: multiplicity is exact, not just aggregate-exact
       val rows = factT.join(dim, Seq("k"))
       assert(fired(rows) && rows.count() === 12000)
-      // FACT-PRESERVING left join fires (r18, SaltBench-measured) and
+      // FACT-PRESERVING left join fires (r18, measured in
+      // docs/BENCH_NOTES.md "r18: SaltJoinRule scope extension") and
       // stays invisible, including the null-extended unmatched rows —
       // every preserved fact row keeps exactly ONE salt
       val leftAuto = leftShape(factT)
@@ -501,7 +502,8 @@ class OpsSpec extends SparkSpec {
         "a malformed kill-switch value degrades to enabled")
       finally spark.conf.unset(SaltJoinRule.EnabledKey)
       // broadcast-eligible dim -> no rewrite (BHJ has no fact shuffle;
-      // SaltBench measured broadcast strictly dominating)
+      // docs/BENCH_NOTES.md "r17: AQE skew-join" measured broadcast
+      // strictly dominating)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
       assert(!fired(shape(factT)), "broadcastable dim must stay unsalted")
     } finally {
