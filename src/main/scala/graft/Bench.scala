@@ -44,7 +44,7 @@ object Bench {
     // costs as their own artifact fields, so the timed certificates
     // measure consumption steady-state
     val fixtures =
-      try SparkEntry.warmFixtures(spark, sfDir)
+      try graft.certs.Fixtures.warmFixtures(spark, sfDir)
       catch { case scala.util.control.NonFatal(_) => Seq.empty[(String, Double)] }
     fixtures.foreach { case (n, t) =>
       println(f"[graft] fixture $n built in $t%.2f s") }

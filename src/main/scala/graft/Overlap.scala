@@ -1,0 +1,36 @@
+package graft
+
+/** Overlap INDEPENDENT Spark actions (guide §2.6): inside a
+  * foreachBatch, each output/state write is its own job, and run
+  * serially each pays a scheduler round-trip while the cluster sits in
+  * the previous job's tail. Callers pass actions that are mutually
+  * independent — disjoint output dirs, inputs already materialized —
+  * and this runs them from a small pool. It returns only once EVERY
+  * action has ended, so a failed batch (and the stream checkpoint that
+  * only commits after foreachBatch returns) fails atomically: a retry
+  * of the same batchId never races a sibling write that is still
+  * running into its batchId-keyed dir. */
+object Overlap {
+
+  /** Run every action and wait for all of them; then rethrow the first
+    * failure (in action order) with the later ones added as suppressed. */
+  def awaitAll(actions: Seq[() => Unit]): Unit = {
+    if (actions.size <= 1) { actions.foreach(_.apply()); return }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(4, actions.size))
+    val failures =
+      try actions.toList
+        .map(a => pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = a()
+        }))
+        .flatMap { f =>
+          try { f.get(); None }
+          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+        }
+      finally pool.shutdown()
+    failures.headOption.foreach { first =>
+      failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+      throw first
+    }
+  }
+}

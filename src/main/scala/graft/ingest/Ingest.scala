@@ -104,7 +104,7 @@ object Ingest {
   // Adapters over the driver's `events` table (TESTDATA.md) — the same
   // operators applied to the generic event stream: parse the `props` JSON
   // payload, validate, key, dedup. These back the oracle-checked queries
-  // in SparkEntry.
+  // in certs.Core.
   // ---------------------------------------------------------------------
 
   /** P1+V1 on events: extract props.k, stamp a validity verdict.

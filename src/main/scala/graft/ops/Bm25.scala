@@ -96,7 +96,7 @@ object Bm25 {
     // the doc count is independent of the postings build — overlap the
     // two jobs (guide §2.6) instead of running them back to back
     var n = 0L
-    graft.streaming.Overlap.awaitAll(Seq(
+    graft.Overlap.awaitAll(Seq(
       () => tf.write.mode("overwrite").parquet(s"$dir/postings"),
       () => n = docs.count()))
     // doc lengths and avgdl derive from the frames JUST WRITTEN — the
@@ -134,13 +134,13 @@ object Bm25 {
     // (guide §2.6) instead of paying five serial scheduler round-trips
     var posts: DataFrame = null
     var dl: DataFrame = null
-    graft.streaming.Overlap.awaitAll(Seq(
+    graft.Overlap.awaitAll(Seq(
       () => posts = spark.read.parquet(s"$dir/postings")
         .join(gone, Seq("doc_id"), "left_anti").localCheckpoint(),
       () => dl = spark.read.parquet(s"$dir/doclens")
         .join(gone, Seq("doc_id"), "left_anti").localCheckpoint()))
     import spark.implicits._
-    graft.streaming.Overlap.awaitAll(Seq(
+    graft.Overlap.awaitAll(Seq(
       () => posts.write.mode("overwrite").parquet(s"$dir/postings"),
       () => dl.write.mode("overwrite").parquet(s"$dir/doclens"),
       () => {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * joins (inner/left/semi/anti/broadcast), aggregation (distinct, rollup,
   * cube), window functions (rank/lag/frames), sort/limit/top-k, set
   * operations, scalar string/date/math expressions — each registered in
-  * SparkEntry with a DuckDB oracle.
+  * certs.Rel with a DuckDB oracle.
   *
   * Scale notes (100 TB):
   *  - Dimensions (region/nation, and customer where it qualifies) are

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.Overlap
+
 /** Streaming ANN index maintenance: arriving vector batches are
   * assigned and encoded against the FROZEN routing/codebook tables
   * ([[graft.ops.AnnIndex.appendVectors]]'s contract) — but through

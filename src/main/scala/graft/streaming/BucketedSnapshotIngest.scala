@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.Overlap
+
 /** Key-bucketed snapshot-state streaming driver: the incremental form
   * of [[SnapshotIngest]] for state that is TABLE-sized rather than
   * view-sized.

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.Overlap
+
 /** Data-contract enforcement at the ingest edge: every micro-batch is
   * split by ROW-LOCAL contract checks — passing rows flow to the
   * output, failing rows land in a quarantine table tagged with the

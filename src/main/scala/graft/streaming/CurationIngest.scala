@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.Overlap
+
 /** Streaming incremental curation: [[graft.ops.Curation]]'s recipe as
   * a continuously-fed admission pipeline — each micro-batch runs
   * quality filter → exact-dedup admission → LSH near-dup admission in

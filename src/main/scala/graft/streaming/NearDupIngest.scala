@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
+import graft.Overlap
+
 /** Streaming NEAR-dup admission: the online form of MinHash-LSH
   * dedup. Each arriving document claims its LSH band buckets
   * ((band, signature) pairs from [[graft.ops.Dedup.minhashSignatures]]);

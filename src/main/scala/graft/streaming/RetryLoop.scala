@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.Overlap
+
 /** ST2/S4 end-to-end: at-least-once redelivery with per-record attempt
   * counts and dead-letter divert — the reference's SQS redrive policy
   * (maxReceiveCount=3, reference iac/main.tf:21-24; consumer failure

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Overlap
 import graft.streaming.InventoryProcessor.{LineRequest, LineVerdict, ProductStock}
 
 /** A2 v2 phase 2 as a self-contained driver: the full
